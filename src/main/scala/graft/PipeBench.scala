@@ -118,13 +118,14 @@ object PipeBench {
             // building — classes compiled from a tree identical to
             // the new HEAD — stamps "-stale" although the build is
             // current. Comparing against the newest commit touching
-            // src/ narrows but cannot close that window (a src-only
-            // commit right after its own build has the same shape),
+            // the build inputs (src/, build.sbt, project/) narrows but
+            // cannot close that window (such a commit right after its
+            // own build has the same shape),
             // so the reading is: "-stale" = REBUILD BEFORE TRUSTING,
             // never = "the numbers are wrong".
             val dirty = git("status", "--porcelain").exists(_.nonEmpty)
             val stale = (for {
-              ctStr <- git("log", "-1", "--format=%ct", "--", "src")
+              ctStr <- git("log", "-1", "--format=%ct", "--", "src", "build.sbt", "project")
               ct <- ctStr.toLongOption
             } yield {
               val newestClass = {

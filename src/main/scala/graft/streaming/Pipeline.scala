@@ -134,9 +134,9 @@ final class Pipeline(cfg: PipelineConfig) {
   /** Native streaming parquet sink (S4/S7/S10): offset WAL + sink
     * commit log give idempotent, reader-atomic file visibility — the
     * engine-side upgrade of the temp-file+rename protocol
-    * (KPW:327-380). File size is capped by record count derived from
-    * the byte cap (parquet-writer feedback refines it in the sized
-    * roller; here a conservative static estimate keeps exactly-once).
+    * (KPW:327-380). Files roll per trigger and per writer task; file
+    * size is not capped here — `maxFileSize` governs only the sized
+    * roller ([[startSized]]).
     */
   // NOTE on S6 trigger semantics: ProcessingTime batches fire at
   // wall-clock MULTIPLES of the interval (Spark's trigger executor),

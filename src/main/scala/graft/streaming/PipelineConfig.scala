@@ -21,8 +21,9 @@ import scala.concurrent.duration._
   *  - `maxRecordsPerTrigger`    ↔ backpressure bound
   *    `maxQueuedRecordsInConsumer`, KPW:471 — realized as the
   *    source's `maxOffsetsPerTrigger`-style rate cap.
-  *  - parquet knobs             ↔ ParquetFile.java:42-51 /
-  *    KPW:476-492 (block size, page size, codec, dictionary).
+  *  - `compression`             ↔ ParquetFile.java:42-51 /
+  *    KPW:476-492. The reference's other parquet knobs (128 MiB block,
+  *    1 MiB page, dictionary on) are Spark's parquet defaults.
   *
   * Unlike the reference, delivery semantics are selectable:
   * `ExactlyOnce` uses Spark's native file sink (offset WAL + sink
@@ -42,13 +43,10 @@ final case class PipelineConfig(
     writerParallelism: Int = 1,
     maxRecordsPerTrigger: Option[Long] = None,
     compression: String = "snappy",
-    parquetBlockSize: Long = 128L * 1024 * 1024,
-    parquetPageSize: Long = 1024 * 1024,
-    dictionaryEnabled: Boolean = true,
     delivery: DeliveryMode = DeliveryMode.ExactlyOnce,
     /** Rename finalized files to the reference's
       * `<yyyyMMdd-HHmmssSSS>_<instanceName>_<shardIndex>.parquet`
-      * scheme (KPW:315-320, defaults KPW:489-491). Only honored in
+      * scheme (KPW:315-320, defaults KPW:489-491). Requires
       * [[DeliveryMode.AtLeastOnceSized]]: the exactly-once sink's
       * `_spark_metadata` commit log records file names, so renaming
       * there would desync the log — the same reason the reference
@@ -60,10 +58,12 @@ final case class PipelineConfig(
 sealed trait DeliveryMode
 object DeliveryMode {
   /** Native streaming parquet sink: checkpointed, idempotent commits;
-    * time-based rolling per trigger, record-count file sizing. */
+    * files roll per trigger and per writer task, and `maxFileSize`
+    * does not apply. */
   case object ExactlyOnce extends DeliveryMode
-  /** foreachBatch roller with adaptive byte-size file caps; replays a
-    * failed batch (the reference's duplication window, KPW:43-44). */
+  /** foreachBatch roller with adaptive byte-size file caps from
+    * `maxFileSize`; replays a failed batch (the reference's
+    * duplication window, KPW:43-44). */
   case object AtLeastOnceSized extends DeliveryMode
 }
 
@@ -82,7 +82,7 @@ object PipelineConfig {
     require(c.writerParallelism > 0, "writerParallelism must be positive")
     require(c.maxRecordsPerTrigger.forall(_ > 0),
       "maxRecordsPerTrigger must be positive")
-    require(c.parquetBlockSize > 0 && c.parquetPageSize > 0,
-      "parquet sizes must be positive")
+    require(!c.referenceFileNaming || c.delivery == DeliveryMode.AtLeastOnceSized,
+      "referenceFileNaming requires DeliveryMode.AtLeastOnceSized")
   }
 }

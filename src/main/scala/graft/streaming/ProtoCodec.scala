@@ -6,6 +6,9 @@ import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.ArrayBuffer
+
 /** Hand-rolled protobuf wire-format codec — the reference's ONLY
   * record format (its caller-supplied `Parser<T>`, KPW:85-89, applied
   * per record at KPW:269-277; test schema test-message.proto:5-10).
@@ -123,222 +126,191 @@ final case class ProtoField(number: Int, name: String, tpe: ProtoType,
 
 final class ProtoDecodeException(msg: String) extends RuntimeException(msg)
 
-/** Low-level wire-format reader/writer. Throws [[ProtoDecodeException]]
-  * on malformed input — the codec maps that to "undecodable". */
-object ProtoWire {
+/** Read position over one payload. `limit` is the end of the
+  * innermost length-delimited run being read, so every read of a
+  * nested or packed element is bounded by its run, not the buffer. */
+private final class ProtoCursor(val buf: Array[Byte]) {
+  var pos: Int = 0
+  var limit: Int = buf.length
 
-  /** Read one base-128 varint starting at `pos`; returns (value, next
-    * position). Malformed when it overruns the buffer or exceeds the
-    * 10-byte maximum. */
-  def readVarint(b: Array[Byte], pos: Int): (Long, Int) = {
+  /** One base-128 varint. Malformed when it overruns the run or
+    * exceeds the 10-byte maximum. */
+  def varint(): Long = {
+    val start = pos
     var v = 0L
     var shift = 0
-    var p = pos
     while (shift < 64) {
-      if (p >= b.length) throw new ProtoDecodeException(s"truncated varint at $pos")
-      val byte = b(p)
+      if (pos >= limit) throw new ProtoDecodeException(s"truncated varint at $start")
+      val byte = buf(pos)
+      pos += 1
       v |= (byte & 0x7fL) << shift
-      p += 1
-      if ((byte & 0x80) == 0) return (v, p)
+      if ((byte & 0x80) == 0) return v
       shift += 7
     }
-    throw new ProtoDecodeException(s"varint longer than 10 bytes at $pos")
+    throw new ProtoDecodeException(s"varint longer than 10 bytes at $start")
   }
 
-  private def readLittleEndian(b: Array[Byte], pos: Int, n: Int): (Long, Int) = {
-    if (pos + n > b.length) throw new ProtoDecodeException(s"truncated fixed$n at $pos")
+  /** One little-endian fixed-width value of `n` bytes. */
+  def fixed(n: Int): Long = {
+    if (n > limit - pos) throw new ProtoDecodeException(s"truncated fixed${8 * n} at $pos")
     var v = 0L
     var i = n - 1
-    while (i >= 0) { v = (v << 8) | (b(pos + i) & 0xffL); i -= 1 }
-    (v, pos + n)
+    while (i >= 0) { v = (v << 8) | (buf(pos + i) & 0xffL); i -= 1 }
+    pos += n
+    v
   }
 
-  private def zigzag(v: Long): Long = (v >>> 1) ^ -(v & 1)
-
-  /** Read one length-delimited run header; returns (start, end). */
-  private def readLenRun(b: Array[Byte], pos: Int): (Int, Int) = {
-    val (len, p2) = readVarint(b, pos)
-    if (len < 0 || p2 + len > b.length)
-      throw new ProtoDecodeException(s"length $len overruns buffer at $p2")
-    (p2, p2 + len.toInt)
+  /** Length prefix of a length-delimited run; returns the run's end. */
+  def run(): Int = {
+    val len = varint()
+    if (len < 0 || len > limit - pos)
+      throw new ProtoDecodeException(s"length $len overruns buffer at $pos")
+    pos + len.toInt
   }
 
-  /** Read ONE value of `tpe` at `pos` on its native wire type;
-    * returns (value, next position). For [[ProtoType.PMessage]] the
-    * sub-record decodes recursively to a [[Row]] — a malformed nested
-    * payload fails the whole record, like protobuf-java's parser. */
-  private def readScalar(tpe: ProtoType, b: Array[Byte], pos: Int): (Any, Int) =
-    tpe.wireType match {
-      case 0 =>
-        val (v, p2) = readVarint(b, pos)
-        val value: Any = tpe match {
-          case ProtoType.Int32 | ProtoType.UInt32 => v.toInt
-          case ProtoType.Int64 | ProtoType.UInt64 => v
-          case ProtoType.SInt32 => zigzag(v).toInt
-          case ProtoType.SInt64 => zigzag(v)
-          case ProtoType.Bool => v != 0L
-          case t => throw new ProtoDecodeException(s"bad varint type $t")
-        }
-        (value, p2)
-      case 1 =>
-        val (v, p2) = readLittleEndian(b, pos, 8)
-        val value: Any = tpe match {
-          case ProtoType.PDouble => java.lang.Double.longBitsToDouble(v)
-          case _ => v
-        }
-        (value, p2)
-      case 2 =>
-        val (start, end) = readLenRun(b, pos)
-        val value: Any = tpe match {
-          case ProtoType.PString =>
-            new String(b, start, end - start, java.nio.charset.StandardCharsets.UTF_8)
-          case ProtoType.PMessage(sub) =>
-            Row.fromSeq(decode(sub, java.util.Arrays.copyOfRange(b, start, end))
-              .toIndexedSeq)
-          case _ => java.util.Arrays.copyOfRange(b, start, end)
-        }
-        (value, end)
-      case 5 =>
-        val (v, p2) = readLittleEndian(b, pos, 4)
-        val value: Any = tpe match {
-          case ProtoType.PFloat => java.lang.Float.intBitsToFloat(v.toInt)
-          case _ => v.toInt
-        }
-        (value, p2)
-      case w => throw new ProtoDecodeException(s"unsupported wire type $w")
-    }
+  /** Narrow `limit` to the length-delimited run at the cursor; returns
+    * the enclosing limit, which [[leave]] restores. */
+  def enter(): Int = {
+    val end = run()
+    val outer = limit
+    limit = end
+    outer
+  }
 
-  /** Decode `bytes` against `fields` into column values ordered like
-    * the descriptor list (null = absent optional; absent repeated =
-    * empty array, protobuf's getList semantics). */
-  def decode(fields: Seq[ProtoField], bytes: Array[Byte]): Array[Any] = {
-    val byNumber = fields.iterator.zipWithIndex
-      .map { case (f, i) => f.number -> ((f, i)) }.toMap
-    val out = new Array[Any](fields.length)
-    val rep = new Array[scala.collection.mutable.ArrayBuffer[Any]](fields.length)
-    val maps = new Array[scala.collection.mutable.LinkedHashMap[Any, Any]](fields.length)
-    fields.iterator.zipWithIndex.foreach { case (f, i) =>
-      if (f.repeated) rep(i) = scala.collection.mutable.ArrayBuffer.empty[Any]
-      f.tpe match {
-        case _: ProtoType.PMap =>
-          maps(i) = scala.collection.mutable.LinkedHashMap.empty[Any, Any]
-        case _ => ()
-      }
-    }
-    val seen = new Array[Boolean](fields.length)
-    var p = 0
-    while (p < bytes.length) {
-      val (tag, p1) = readVarint(bytes, p)
-      val fieldNum = (tag >>> 3).toInt
+  def leave(outer: Int): Unit = limit = outer
+}
+
+/** A message descriptor compiled for decoding, once: the sorted
+  * field-number lookup and the decoders of nested messages and map
+  * entries are built here, so a record costs one pass over its bytes.
+  * Throws [[ProtoDecodeException]] on malformed input — the codec maps
+  * that to "undecodable". */
+final class ProtoDecoder(fields: Seq[ProtoField]) extends Serializable {
+  import ProtoType._
+
+  private val fs = fields.toArray
+  private val numbers = fs.map(_.number).sorted
+  private val slots = numbers.map(n => fs.indexWhere(_.number == n))
+  private val subs: Array[ProtoDecoder] = fs.map(_.tpe match {
+    case PMessage(sub) => new ProtoDecoder(sub)
+    case m: PMap => new ProtoDecoder(m.entryFields)
+    case _ => null
+  })
+  private val packed = fs.map(f => f.repeated && ProtoType.packable(f.tpe))
+  // repeated fields and maps collect every occurrence; scalars keep the last
+  private val collects = fs.map(f => f.repeated || f.tpe.isInstanceOf[PMap])
+
+  /** Decode `bytes` into column values ordered like the descriptor
+    * list (null = absent optional; absent repeated = empty array,
+    * protobuf's getList semantics; absent map = empty map, getMap's). */
+  def decode(bytes: Array[Byte]): Array[Any] = read(new ProtoCursor(bytes))
+
+  private def read(c: ProtoCursor): Array[Any] = {
+    val out = new Array[Any](fs.length)
+    while (c.pos < c.limit) {
+      val tag = c.varint()
+      val number = (tag >>> 3).toInt
       val wire = (tag & 7).toInt
-      if (fieldNum <= 0) throw new ProtoDecodeException(s"invalid field number $fieldNum")
-      byNumber.get(fieldNum) match {
-        case Some((f, i)) =>
-          if (f.repeated && ProtoType.packable(f.tpe) && wire == 2) {
-            // packed run: concatenated payloads under one wire-2 tag
-            val (start, end) = readLenRun(bytes, p1)
-            var q = start
-            while (q < end) {
-              val (v, q2) = readScalar(f.tpe, bytes, q)
-              if (q2 > end)
-                throw new ProtoDecodeException(
-                  s"packed ${f.name}: element overruns run end $end")
-              rep(i) += v
-              q = q2
-            }
-            p = end
-          } else {
-            if (wire != f.tpe.wireType)
-              throw new ProtoDecodeException(
-                s"field ${f.name}: wire type $wire, expected ${f.tpe.wireType}")
-            // value reads are INLINE (not via readScalar) on purpose:
-            // this loop is the per-record ingest hot path, and the
-            // (value, pos) tuple readScalar returns per field was
-            // measured as a double-digit-percent throughput hit on
-            // the pipeline bench
-            def store(v: Any): Unit =
-              if (f.repeated) rep(i) += v
-              else out(i) = v // repeated occurrence of a scalar: last wins
-            p = wire match {
-              case 0 =>
-                val (v, p2) = readVarint(bytes, p1)
-                store(f.tpe match {
-                  case ProtoType.Int32 | ProtoType.UInt32 => v.toInt
-                  case ProtoType.Int64 | ProtoType.UInt64 => v
-                  case ProtoType.SInt32 => zigzag(v).toInt
-                  case ProtoType.SInt64 => zigzag(v)
-                  case ProtoType.Bool => v != 0L
-                  case t => throw new ProtoDecodeException(s"bad varint type $t")
-                })
-                p2
-              case 1 =>
-                val (v, p2) = readLittleEndian(bytes, p1, 8)
-                store(f.tpe match {
-                  case ProtoType.PDouble => java.lang.Double.longBitsToDouble(v)
-                  case _ => v
-                })
-                p2
-              case 2 =>
-                val (start, end) = readLenRun(bytes, p1)
-                f.tpe match {
-                  case m: ProtoType.PMap =>
-                    // one map ENTRY submessage: { K key = 1; V value = 2 }.
-                    // Duplicate keys: last wins; absent key/value: proto3
-                    // default — protobuf-java's map merge semantics.
-                    val entry = decode(m.entryFields,
-                      java.util.Arrays.copyOfRange(bytes, start, end))
-                    val k = if (entry(0) == null) ProtoType.defaultOf(m.keyType)
-                            else entry(0)
-                    val v = if (entry(1) == null) ProtoType.defaultOf(m.valueType)
-                            else entry(1)
-                    maps(i).put(k, v)
-                  case ProtoType.PString =>
-                    store(new String(bytes, start, end - start,
-                      java.nio.charset.StandardCharsets.UTF_8))
-                  case ProtoType.PMessage(sub) =>
-                    store(Row.fromSeq(decode(sub,
-                      java.util.Arrays.copyOfRange(bytes, start, end)).toIndexedSeq))
-                  case _ =>
-                    store(java.util.Arrays.copyOfRange(bytes, start, end))
-                }
-                end
-              case 5 =>
-                val (v, p2) = readLittleEndian(bytes, p1, 4)
-                store(f.tpe match {
-                  case ProtoType.PFloat => java.lang.Float.intBitsToFloat(v.toInt)
-                  case _ => v.toInt
-                })
-                p2
-              case w => throw new ProtoDecodeException(s"unsupported wire type $w")
-            }
-          }
-          seen(i) = true
-        case None =>
-          // unknown field: skip by wire type (groups 3/4 unsupported)
-          p = wire match {
-            case 0 => readVarint(bytes, p1)._2
-            case 1 => readLittleEndian(bytes, p1, 8)._2
-            case 2 => readLenRun(bytes, p1)._2
-            case 5 => readLittleEndian(bytes, p1, 4)._2
-            case w => throw new ProtoDecodeException(s"unsupported wire type $w")
-          }
+      if (number <= 0) throw new ProtoDecodeException(s"invalid field number $number")
+      val k = java.util.Arrays.binarySearch(numbers, number)
+      if (k < 0) skip(c, wire) // unknown field (forward compatibility)
+      else {
+        val i = slots(k)
+        val t = fs(i).tpe
+        if (wire == 2 && packed(i)) {
+          // packed run: concatenated payloads under one wire-2 tag
+          val outer = c.enter()
+          val all = collected(out, i)
+          while (c.pos < c.limit) all += value(t, null, c)
+          c.leave(outer)
+        } else {
+          if (wire != t.wireType)
+            throw new ProtoDecodeException(
+              s"field ${fs(i).name}: wire type $wire, expected ${t.wireType}")
+          val v = value(t, subs(i), c)
+          if (collects(i)) collected(out, i) += v else out(i) = v
+        }
       }
     }
-    fields.iterator.zipWithIndex.foreach { case (f, i) =>
-      if (f.required && !seen(i))
+    var i = 0
+    while (i < fs.length) {
+      val f = fs(i)
+      if (collects(i)) {
+        val all = out(i).asInstanceOf[ArrayBuffer[Any]]
+        out(i) = f.tpe match {
+          // duplicate map keys: the last entry wins (protobuf-java's merge)
+          case _: PMap =>
+            if (all == null) Map.empty else all.asInstanceOf[ArrayBuffer[(Any, Any)]].toMap
+          case _ => if (all == null) Nil else all.toSeq
+        }
+      } else if (f.required && out(i) == null)
         throw new ProtoDecodeException(s"missing required field ${f.name}")
-      if (f.repeated) out(i) = rep(i).toSeq
-      f.tpe match {
-        // absent map = empty map (protobuf getMap semantics, the
-        // sibling of absent-repeated = empty array above)
-        case _: ProtoType.PMap => out(i) = maps(i).toMap
-        case _ => ()
-      }
+      i += 1
     }
     out
   }
 
-  // ---- encoder (tests + the oracle-gated roundtrip query) ----
+  private def collected(out: Array[Any], i: Int): ArrayBuffer[Any] = {
+    if (out(i) == null) out(i) = ArrayBuffer.empty[Any]
+    out(i).asInstanceOf[ArrayBuffer[Any]]
+  }
+
+  /** ONE value of `t` at the cursor, read on its native wire type;
+    * `sub` decodes a nested message or map entry. A malformed nested
+    * payload fails the whole record, like protobuf-java's parser. */
+  private def value(t: ProtoType, sub: ProtoDecoder, c: ProtoCursor): Any = t match {
+    case Int32 | UInt32 => c.varint().toInt
+    case Int64 | UInt64 => c.varint()
+    case SInt32 => zigzag(c.varint()).toInt
+    case SInt64 => zigzag(c.varint())
+    case Bool => c.varint() != 0L
+    case Fixed64 | SFixed64 => c.fixed(8)
+    case PDouble => java.lang.Double.longBitsToDouble(c.fixed(8))
+    case Fixed32 | SFixed32 => c.fixed(4).toInt
+    case PFloat => java.lang.Float.intBitsToFloat(c.fixed(4).toInt)
+    case PString =>
+      val end = c.run()
+      val s = new String(c.buf, c.pos, end - c.pos, java.nio.charset.StandardCharsets.UTF_8)
+      c.pos = end
+      s
+    case PBytes =>
+      val end = c.run()
+      val b = java.util.Arrays.copyOfRange(c.buf, c.pos, end)
+      c.pos = end
+      b
+    case _: PMessage => Row.fromSeq(ArraySeq.unsafeWrapArray(sub.readRun(c)))
+    case m: PMap =>
+      // one map ENTRY submessage { K key = 1; V value = 2 }; an absent
+      // key or value decodes to its proto3 default
+      val e = sub.readRun(c)
+      (if (e(0) == null) ProtoType.defaultOf(m.keyType) else e(0),
+        if (e(1) == null) ProtoType.defaultOf(m.valueType) else e(1))
+  }
+
+  private def zigzag(v: Long): Long = (v >>> 1) ^ -(v & 1)
+
+  /** Decode the submessage in the length-delimited run at the cursor. */
+  private def readRun(c: ProtoCursor): Array[Any] = {
+    val outer = c.enter()
+    val values = read(c)
+    c.leave(outer)
+    values
+  }
+
+  /** Step over one unknown field's value by its wire type (groups,
+    * wire 3/4, are unsupported). */
+  private def skip(c: ProtoCursor, wire: Int): Unit = wire match {
+    case 0 => c.varint()
+    case 1 => c.fixed(8)
+    case 2 => c.pos = c.run()
+    case 5 => c.fixed(4)
+    case w => throw new ProtoDecodeException(s"unsupported wire type $w")
+  }
+}
+
+/** Wire-format writer: the canonical encoder for fixtures, tests and
+  * the oracle-gated roundtrip queries. */
+object ProtoWire {
 
   def writeVarint(out: java.io.ByteArrayOutputStream, value: Long): Unit = {
     var v = value
@@ -433,11 +405,13 @@ final case class ProtoCodec(fields: Seq[ProtoField]) extends RecordCodec {
   override val schema: StructType =
     StructType(fields.map(f => StructField(f.name, f.dataType, nullable = true)))
 
+  private val decoder = new ProtoDecoder(fields) // compiled once, shipped with the UDF
+
   // null iff undecodable — the RecordCodec contract FailFast/DeadLetter key on
   private val u = functions.udf(new UDF1[Array[Byte], Row] {
     override def call(bytes: Array[Byte]): Row =
       if (bytes == null) null
-      else try Row.fromSeq(ProtoWire.decode(fields, bytes).toIndexedSeq)
+      else try Row.fromSeq(ArraySeq.unsafeWrapArray(decoder.decode(bytes)))
       catch { case _: ProtoDecodeException => null }
   }, schema)
 

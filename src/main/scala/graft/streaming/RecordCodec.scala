@@ -37,60 +37,50 @@ trait RecordCodec {
     * a record that parses but carries only null field values is a
     * valid record and must decode to a non-null struct. (Parsers with
     * a PERMISSIVE mode distinguish the two via a corrupt-record
-    * column; see [[JsonCodec]].)
+    * column; see [[PermissiveCodec]].)
     */
   def decode(bytes: Column): Column
 }
 
-private[streaming] object RecordCodec {
-  /** Corrupt-record marker column used internally by the parsing
-    * codecs; never visible in decoded output. */
-  val CorruptCol = "_graft_corrupt"
+/** Text payloads parsed by Spark's `from_json`/`from_csv` (`parse`,
+  * with the format's `options`) in PERMISSIVE mode with a
+  * corrupt-record column, so a genuinely unparsable record decodes to
+  * null while a valid record whose every field is null (e.g.
+  * `{"query":null,"timestamp":null}`) stays a non-null struct — the
+  * distinction DeadLetter/FailFast policies key on.
+  */
+sealed abstract class PermissiveCodec(schema: StructType,
+    parse: (Column, StructType, Map[String, String]) => Column,
+    options: Map[String, String]) extends RecordCodec {
+  import PermissiveCodec.CorruptCol
+  require(!schema.fieldNames.contains(CorruptCol),
+    s"schema must not contain reserved column $CorruptCol")
 
-  /** Null out the struct when the parser flagged the record corrupt,
-    * otherwise re-project to the clean schema (drops the marker).
-    * `parsed` must follow `schema` + the marker column.
-    */
-  def stripCorrupt(parsed: Column, schema: StructType): Column =
-    when(parsed.isNull || parsed.getField(CorruptCol).isNotNull,
-      lit(null).cast(schema))
+  override def decode(bytes: Column): Column = {
+    val parsed = parse(bytes.cast("string"), schema.add(CorruptCol, StringType),
+      options ++ Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol))
+    // null out a record the parser flagged corrupt; re-project the
+    // rest to the clean schema (drops the marker)
+    when(parsed.isNull || parsed.getField(CorruptCol).isNotNull, lit(null).cast(schema))
       .otherwise(struct(schema.fields.toIndexedSeq.map(f =>
         parsed.getField(f.name).as(f.name)): _*))
-}
-
-/** JSON payloads (UTF-8 bytes). Parsed in PERMISSIVE mode with a
-  * corrupt-record column so a genuinely unparsable record decodes to
-  * null while a valid record whose every field is null (e.g.
-  * `{"query":null,"timestamp":null}`) stays a non-null struct —
-  * the distinction DeadLetter/FailFast policies key on.
-  */
-final case class JsonCodec(schema: StructType) extends RecordCodec {
-  require(!schema.fieldNames.contains(RecordCodec.CorruptCol),
-    s"schema must not contain reserved column ${RecordCodec.CorruptCol}")
-  override def decode(bytes: Column): Column = {
-    val withCorrupt = schema.add(RecordCodec.CorruptCol, StringType)
-    val parsed = from_json(bytes.cast("string"), withCorrupt,
-      Map("mode" -> "PERMISSIVE",
-        "columnNameOfCorruptRecord" -> RecordCodec.CorruptCol))
-    RecordCodec.stripCorrupt(parsed, schema)
   }
 }
 
-/** Single-line CSV payloads. Same corrupt-record discipline as
-  * [[JsonCodec]] — a malformed line decodes to null, a parseable
-  * line of empty fields does not.
-  */
-final case class CsvCodec(schema: StructType, sep: String = ",") extends RecordCodec {
-  require(!schema.fieldNames.contains(RecordCodec.CorruptCol),
-    s"schema must not contain reserved column ${RecordCodec.CorruptCol}")
-  override def decode(bytes: Column): Column = {
-    val withCorrupt = schema.add(RecordCodec.CorruptCol, StringType)
-    val parsed = from_csv(bytes.cast("string"), withCorrupt,
-      Map("sep" -> sep, "mode" -> "PERMISSIVE",
-        "columnNameOfCorruptRecord" -> RecordCodec.CorruptCol))
-    RecordCodec.stripCorrupt(parsed, schema)
-  }
+private object PermissiveCodec {
+  /** Corrupt-record marker column; never visible in decoded output. */
+  val CorruptCol = "_graft_corrupt"
 }
+
+/** JSON payloads (UTF-8 bytes); see [[PermissiveCodec]]. */
+final case class JsonCodec(schema: StructType)
+  extends PermissiveCodec(schema, from_json(_, _, _), Map.empty)
+
+/** Single-line CSV payloads; see [[PermissiveCodec]] — a malformed
+  * line decodes to null, a parseable line of empty fields does not.
+  */
+final case class CsvCodec(schema: StructType, sep: String = ",")
+  extends PermissiveCodec(schema, from_csv(_, _, _), Map("sep" -> sep))
 
 /** Arbitrary binary formats via a caller-supplied decoder function —
   * the direct analog of the reference's `Parser<T>` plug-in point.

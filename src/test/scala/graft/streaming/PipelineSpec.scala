@@ -50,6 +50,8 @@ class PipelineSpec extends AnyFunSuite {
       PipelineConfig("/t", "/c", writerParallelism = 0))
     intercept[IllegalArgumentException](
       PipelineConfig("/t", "/c", maxRecordsPerTrigger = Some(0)))
+    intercept[IllegalArgumentException]( // the commit log records Spark's names
+      PipelineConfig("/t", "/c", referenceFileNaming = true))
   }
 
   test("golden roundtrip: bytes -> decode -> parquet -> multiset equality") {

@@ -30,7 +30,7 @@ class ProtoCodecSpec extends AnyFunSuite {
     val want = hex("0A 07 74 65 73 74 69 6E 67 10 96 01")
     val got = SampleMessageProto.encode("testing", 150L, null, null)
     assert(got.toSeq == want.toSeq)
-    val row = ProtoWire.decode(SampleMessageProto.fields, want)
+    val row = new ProtoDecoder(SampleMessageProto.fields).decode(want)
     assert(row.toSeq == Seq("testing", 150L, null, null))
   }
 
@@ -51,7 +51,7 @@ class ProtoCodecSpec extends AnyFunSuite {
         Float.MinPositiveValue, Double.MaxValue))
     for (vals <- cases) {
       val bytes = ProtoWire.encode(fields, vals)
-      val back = ProtoWire.decode(fields, bytes)
+      val back = new ProtoDecoder(fields).decode(bytes)
       (back.toSeq, vals).zipped.foreach {
         case (g: Array[Byte], w: Array[Byte]) => assert(g.toSeq == w.toSeq)
         case (g, w) => assert(g == w, s"got $g want $w")
@@ -89,7 +89,7 @@ class ProtoCodecSpec extends AnyFunSuite {
     } yield Seq(i32, i64, s32, s64, b, str, f32, f64, flt, dbl)
     val cases = Gen.listOfN(200, genVals)(Gen.Parameters.default, Seed(7L)).get
     for (vals <- cases) {
-      val back = ProtoWire.decode(fields, ProtoWire.encode(fields, vals)).toSeq
+      val back = new ProtoDecoder(fields).decode(ProtoWire.encode(fields, vals)).toSeq
       (back, vals).zipped.foreach {
         // NaN != NaN under ==: compare across the bit pattern
         case (g: Float, w: Float) =>
@@ -120,7 +120,7 @@ class ProtoCodecSpec extends AnyFunSuite {
       Seq("root", 9L), // nested message as value Seq
       Seq(Seq("a", 1L), Seq("b", null)), // repeated nested
       Seq("x", "", "zü"))
-    val back = ProtoWire.decode(fields, ProtoWire.encode(fields, vals))
+    val back = new ProtoDecoder(fields).decode(ProtoWire.encode(fields, vals))
     assert(back(0) == 7L)
     assert(back(1) == Seq(3, -1, 300000))
     assert(back(2) == org.apache.spark.sql.Row("root", 9L))
@@ -129,14 +129,14 @@ class ProtoCodecSpec extends AnyFunSuite {
     assert(back(4) == Seq("x", "", "zü"))
     // absent repeated decodes to EMPTY (protobuf getList), absent
     // optional nested to null
-    val sparse = ProtoWire.decode(fields, ProtoWire.encode(fields,
+    val sparse = new ProtoDecoder(fields).decode(ProtoWire.encode(fields,
       Seq(1L, null, null, null, null)))
     assert(sparse.toSeq == Seq(1L, Seq(), null, Seq(), Seq()))
     // a required field missing INSIDE a nested message fails the record
     val badInner = ProtoWire.encode(
       Seq(ProtoField(1, "id", Int64), ProtoField(3, "meta", PMessage(inner))),
       Seq(1L, Seq(null, 5L)))
-    intercept[ProtoDecodeException](ProtoWire.decode(fields, badInner))
+    intercept[ProtoDecodeException](new ProtoDecoder(fields).decode(badInner))
     // schema surfaces ARRAY/STRUCT columns
     val st = ProtoCodec(fields).schema
     assert(st("scores").dataType.typeName == "array")
@@ -150,13 +150,31 @@ class ProtoCodecSpec extends AnyFunSuite {
     val fields = Seq(ProtoField(1, "vs", Int32, repeated = true))
     // tag(1,len)=0x0A, run of varints 3,270,86942 (encoding-guide values)
     val packed = hex("0A 06 03 8E 02 9E A7 05")
-    assert(ProtoWire.decode(fields, packed).head == Seq(3, 270, 86942))
+    assert(new ProtoDecoder(fields).decode(packed).head == Seq(3, 270, 86942))
     // mixed packed + unpacked occurrences append in payload order
     val mixed = hex("0A 02 03 04") ++ hex("08 05")
-    assert(ProtoWire.decode(fields, mixed).head == Seq(3, 4, 5))
+    assert(new ProtoDecoder(fields).decode(mixed).head == Seq(3, 4, 5))
     // a packed element overrunning its run is malformed
     intercept[ProtoDecodeException](
-      ProtoWire.decode(fields, hex("0A 01 8E"))) // varint continues past run
+      new ProtoDecoder(fields).decode(hex("0A 01 8E"))) // varint continues past run
+    // packed runs of every other wire type: 64-bit (wire 1), 32-bit
+    // (wire 5) and zigzag varints, little-endian per the encoding guide
+    val wide = Seq(
+      ProtoField(1, "f64", Fixed64, repeated = true),
+      ProtoField(2, "dbl", PDouble, repeated = true),
+      ProtoField(3, "f32", Fixed32, repeated = true),
+      ProtoField(4, "flt", PFloat, repeated = true),
+      ProtoField(5, "s32", SInt32, repeated = true),
+      ProtoField(6, "s64", SInt64, repeated = true))
+    val runs = hex("0A 10 01 00 00 00 00 00 00 00 FF FF FF FF FF FF FF FF") ++
+      hex("12 08 00 00 00 00 00 00 F0 3F") ++ // 1.0
+      hex("1A 08 01 00 00 00 FE FF FF FF") ++
+      hex("22 04 00 00 C0 3F") ++ // 1.5f
+      hex("2A 05 01 02 7F 80 01") ++ // zigzag -1, 1, -64, 64
+      hex("32 0B FF FF FF FF FF FF FF FF FF 01 04") // zigzag Long.MinValue, 2
+    assert(new ProtoDecoder(wide).decode(runs).toSeq == Seq(
+      Seq(1L, -1L), Seq(1.0), Seq(1, -2), Seq(1.5f), Seq(-1, 1, -64, 64),
+      Seq(Long.MinValue, 2L)))
   }
 
   test("proto map fields decode as entry arrays; Spark map_from_entries gives protobuf last-wins") {
@@ -175,7 +193,7 @@ class ProtoCodecSpec extends AnyFunSuite {
       ProtoField(2, "attrs", PMessage(entry), repeated = true))
     val bytes = ProtoWire.encode(fields, Seq(
       5L, Seq(Seq("a", 1L), Seq("b", 2L), Seq("a", 3L))))
-    val row = ProtoWire.decode(fields, bytes)
+    val row = new ProtoDecoder(fields).decode(bytes)
     val entries = row(1).asInstanceOf[Seq[org.apache.spark.sql.Row]]
     assert(entries.map(e => (e.getString(0), e.getLong(1))) ==
       Seq(("a", 1L), ("b", 2L), ("a", 3L))) // payload order preserved
@@ -216,7 +234,7 @@ class ProtoCodecSpec extends AnyFunSuite {
       Map("a" -> 1L, "b" -> 2L),
       Map(1 -> org.apache.spark.sql.Row("alice", 10L)),
       null))
-    val row = ProtoWire.decode(fields, bytes)
+    val row = new ProtoDecoder(fields).decode(bytes)
     assert(row(1) === Map("a" -> 1L, "b" -> 2L))
     val players = row(2).asInstanceOf[Map[Any, Any]]
     assert(players(1).asInstanceOf[org.apache.spark.sql.Row].getString(0) == "alice")
@@ -234,7 +252,7 @@ class ProtoCodecSpec extends AnyFunSuite {
       out.write(entry, 0, entry.length)
       out.toByteArray
     }
-    assert(ProtoWire.decode(fields, dup)(1) === Map("a" -> 99L, "b" -> 2L))
+    assert(new ProtoDecoder(fields).decode(dup)(1) === Map("a" -> 99L, "b" -> 2L))
     // absent key/value inside an entry: proto3 defaults, never null
     val emptyEntry = {
       val out = new java.io.ByteArrayOutputStream()
@@ -242,7 +260,7 @@ class ProtoCodecSpec extends AnyFunSuite {
       ProtoWire.writeVarint(out, (2L << 3) | 2L); ProtoWire.writeVarint(out, 0L)
       out.toByteArray
     }
-    assert(ProtoWire.decode(fields, emptyEntry)(1) === Map("" -> 0L))
+    assert(new ProtoDecoder(fields).decode(emptyEntry)(1) === Map("" -> 0L))
     // invalid declarations are rejected up front
     intercept[IllegalArgumentException](PMap(PDouble, Int64))
     intercept[IllegalArgumentException](
@@ -265,22 +283,26 @@ class ProtoCodecSpec extends AnyFunSuite {
 
   test("unknown fields are skipped; repeated scalar occurrence: last wins") {
     val base = SampleMessageProto.encode("q", 1L, 2, null)
-    // append unknown field 99 (varint), unknown field 98 (length-
-    // delimited), then field 3 AGAIN with a new value
+    // append unknown fields 99 (varint), 98 (length-delimited), 97
+    // (64-bit) and 96 (32-bit), then field 3 AGAIN with a new value;
+    // the fixed-width fillers are group tags (0x0B), so a skip that
+    // lands mid-value fails the record
     val out = new java.io.ByteArrayOutputStream()
     out.write(base, 0, base.length)
     ProtoWire.writeVarint(out, (99L << 3) | 0); ProtoWire.writeVarint(out, 12345L)
     ProtoWire.writeVarint(out, (98L << 3) | 2); ProtoWire.writeVarint(out, 3L)
     out.write(Array[Byte](7, 8, 9), 0, 3)
+    ProtoWire.writeVarint(out, (97L << 3) | 1); out.write(Array.fill[Byte](8)(0x0B), 0, 8)
+    ProtoWire.writeVarint(out, (96L << 3) | 5); out.write(Array.fill[Byte](4)(0x0B), 0, 4)
     ProtoWire.writeVarint(out, (3L << 3) | 0); ProtoWire.writeVarint(out, 42L)
-    val row = ProtoWire.decode(SampleMessageProto.fields, out.toByteArray)
+    val row = new ProtoDecoder(SampleMessageProto.fields).decode(out.toByteArray)
     assert(row.toSeq == Seq("q", 1L, 42, null))
   }
 
   test("malformed inputs are undecodable: truncation, overrun, mismatch, missing required") {
     val good = SampleMessageProto.encode("q", 1L, null, null)
     def bad(b: Array[Byte]): Unit =
-      intercept[ProtoDecodeException](ProtoWire.decode(SampleMessageProto.fields, b))
+      intercept[ProtoDecodeException](new ProtoDecoder(SampleMessageProto.fields).decode(b))
     bad(good.dropRight(1)) // truncated trailing varint
     bad(hex("0A 7F 68 69")) // declared length 127 overruns 2-byte payload
     bad(hex("0D 01 02 03 04")) // field 1 with wire type 5: mismatch
@@ -288,6 +310,10 @@ class ProtoCodecSpec extends AnyFunSuite {
     bad(hex("10 96 01")) // only field 2 — required query missing
     bad(Array.fill[Byte](11)(-1)) // varint > 10 bytes
     bad(hex("0B")) // group tag (wire 3): unsupported/deprecated
+    // a packed fixed32 run whose last element is cut short by the
+    // run's end, though the payload goes on (unknown field 2 follows)
+    intercept[ProtoDecodeException](new ProtoDecoder(Seq(ProtoField(1, "vs",
+      ProtoType.Fixed32, repeated = true))).decode(hex("0A 06 01 00 00 00 02 00 10 01")))
     // and the codec maps the throw to a null struct (DeadLetter fuel):
     import spark.implicits._
     val df = Seq(good, good.dropRight(1)).toDF("value")
